@@ -24,7 +24,11 @@ if-none-match put, same protocol):
 - OPTIMISTIC CONCURRENCY: a committer losing the link() race re-reads
   the log and retries on the next version (append commits compose;
   overwrite commits last-writer-wins — the Delta conflict matrix
-  collapsed to the two modes this sink supports).
+  collapsed to the two modes this sink supports). Read-modify-write
+  commits (merge, delete, compaction) pin ``expected_base`` instead
+  and redo their work on :class:`CommitConflict`. Every writer stages
+  its files through one helper and publishes through
+  :func:`commit_staged`.
 - TIME TRAVEL: every version's file list is kept; ``read_table(...,
   version=n)`` reproduces any historical snapshot until ``vacuum``
   drops files unreferenced by retained versions.
@@ -57,24 +61,42 @@ from pyspark.sql import DataFrame, SparkSession
 #: fine for the retention/retraction deletes DVs exist for, and the
 #: single output file keeps the manifest small. PAST the bound
 #: (a corpus-sized retraction) the write keeps its natural
-#: partitioning — the staging rename loops already handle multiple
+#: partitioning — the staging rename loop already handles multiple
 #: part files — so no frame can route through one task just because
 #: it passed through this sink.
 _DV_SINGLE_FILE_MAX_ROWS = 10_000_000
 
 
-def _stage_delete_vectors(
-    matches: DataFrame, staging: Path, n: int
-) -> None:
-    """Write a (__file, __pos) deletion-vector frame to ``staging``,
-    single-file when small (bounded by _DV_SINGLE_FILE_MAX_ROWS),
-    naturally partitioned when not. ``n`` is the caller's row count —
-    callers already count to decide no-op vs commit, so taking it as
-    a parameter avoids a third execution of the matches lineage."""
-    staged = (
-        matches.coalesce(1) if n <= _DV_SINGLE_FILE_MAX_ROWS else matches
-    )
-    staged.write.mode("overwrite").parquet(str(staging))
+def _stage(
+    df: DataFrame, table_path: str, sub: str = "data",
+    n_rows: int | None = None,
+) -> list[str]:
+    """Write ``df`` to a private ``_staging-<token>`` directory, rename
+    its part files into ``sub/`` (``data`` or ``deletes``) and return
+    their table-relative names — the files exist on disk but stay
+    invisible to readers until a manifest names them. Every writer in
+    this module stages here and publishes through :func:`commit_staged`
+    (the DataSource sink writes its files on executors instead).
+
+    Deletion vectors (``sub='deletes'``) are written single-file while
+    ``n_rows`` — the caller's row count, which it already took to
+    decide no-op vs commit — stays under _DV_SINGLE_FILE_MAX_ROWS, and
+    naturally partitioned past it."""
+    table = Path(table_path)
+    token = uuid.uuid4().hex[:12]
+    staging = table / f"_staging-{token}"
+    if sub == "deletes" and n_rows <= _DV_SINGLE_FILE_MAX_ROWS:
+        df = df.coalesce(1)
+    df.write.mode("overwrite").parquet(str(staging))
+    (table / sub).mkdir(parents=True, exist_ok=True)
+    tag = "dv" if sub == "deletes" else "part"
+    names = []
+    for i, part in enumerate(sorted(staging.glob("*.parquet"))):
+        name = f"{sub}/{token}-{tag}{i:05d}.parquet"
+        os.rename(part, table / name)
+        names.append(name)
+    shutil.rmtree(staging, ignore_errors=True)
+    return names
 
 
 def _log_dir(table_path: str) -> Path:
@@ -98,6 +120,28 @@ def versions(table_path: str) -> list[int]:
 
 def _read_manifest(table_path: str, version: int) -> dict:
     return json.loads(_manifest_path(table_path, version).read_text())
+
+
+def _live_positions(
+    spark: SparkSession, table_path: str, df: DataFrame,
+    delete_files: list[str],
+) -> DataFrame:
+    """``df`` (a scan of the table's data files) plus each row's
+    (``__file``, ``__pos``) coordinates from the parquet reader's
+    hidden ``_metadata`` columns, with the rows the deletion vectors
+    ``delete_files`` name anti-joined out."""
+    from pyspark.sql import functions as F
+
+    df = df.withColumn(
+        "__file",
+        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
+    ).withColumn("__pos", F.col("_metadata.row_index"))
+    if delete_files:
+        dv = spark.read.parquet(
+            *[str(Path(table_path) / f) for f in delete_files]
+        )
+        df = df.join(F.broadcast(dv), ["__file", "__pos"], "left_anti")
+    return df
 
 
 class CommitConflict(RuntimeError):
@@ -330,26 +374,12 @@ def commit_write(
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"unknown commit mode: {mode}")
-    table = Path(table_path)
-    data_dir = table / "data"
-    data_dir.mkdir(parents=True, exist_ok=True)
-    _log_dir(table_path).mkdir(parents=True, exist_ok=True)
-
     # 1. stage the data files (invisible to readers until the commit)
-    token = uuid.uuid4().hex[:12]
-    staging = table / f"_staging-{token}"
-    df.write.mode("overwrite").parquet(str(staging))
-    new_files = []
-    new_stats: dict = {}
-    for i, part in enumerate(sorted(staging.glob("*.parquet"))):
-        name = f"{token}-part{i:05d}.parquet"
-        os.rename(part, data_dir / name)
-        new_files.append(f"data/{name}")
-        if stats_cols:
-            new_stats[f"data/{name}"] = _file_stats(
-                data_dir / name, stats_cols
-            )
-    shutil.rmtree(staging, ignore_errors=True)
+    new_files = _stage(df, table_path)
+    new_stats = (
+        {f: _file_stats(Path(table_path) / f, stats_cols) for f in new_files}
+        if stats_cols else {}
+    )
     new_bloom: dict = {}
     if bloom_cols and new_files:
         new_bloom = _file_blooms(
@@ -388,16 +418,28 @@ def commit_staged(
     new_stats: dict | None = None,
     new_bloom: dict | None = None,
     extra_manifest: dict | None = None,
+    new_delete_files: list[str] | None = None,
 ) -> int:
     """Publish ALREADY-STAGED data files (table-relative names, bytes
     fully on disk, invisible until named) as the next version — the
-    manifest half of :func:`commit_write`, exposed for writers that
+    manifest half of every lake write (:func:`commit_write`,
+    :func:`delete_where`, :func:`merge_into`), exposed for writers that
     produce files on executors themselves (the Python DataSource sink
     in sources/lake_sink.py). Same O_EXCL link protocol, same version
     -race retries, same append carry-forward of deletion vectors and
-    skip indexes."""
-    if mode not in ("append", "overwrite"):
+    skip indexes.
+
+    ``mode='merge'`` and ``mode='delete'`` are append-shaped commits
+    that also add the staged deletion vectors ``new_delete_files``
+    (``deletes/...`` names) to the carried ones. Their positions were
+    computed against one snapshot, so both require ``expected_base``."""
+    if mode not in ("append", "overwrite", "merge", "delete"):
         raise ValueError(f"unknown commit mode: {mode}")
+    if mode in ("merge", "delete"):
+        if expected_base is None:
+            raise ValueError(f"a {mode} commit requires expected_base")
+    elif new_delete_files:
+        raise ValueError(f"an {mode} commit cannot add deletion vectors")
     if extra_manifest:
         bad = _RESERVED_MANIFEST_KEYS & extra_manifest.keys()
         if bad:
@@ -406,6 +448,7 @@ def commit_staged(
             )
     new_stats = new_stats or {}
     new_bloom = new_bloom or {}
+    new_delete_files = new_delete_files or []
     _log_dir(table_path).mkdir(parents=True, exist_ok=True)
     token = uuid.uuid4().hex[:12]
     for _ in range(max_retries):
@@ -421,13 +464,15 @@ def commit_staged(
         carried_dv: list[str] = []
         stats: dict = dict(new_stats)
         bloom: dict = dict(new_bloom)
-        if mode == "append" and existing:
+        if mode != "overwrite" and existing:
             prev = _read_manifest(table_path, existing[-1])
             files = prev["files"] + new_files
             # deletion vectors target immutable existing files — an
             # append must carry them forward or deleted rows would
             # silently resurrect (new files can't collide: unique
-            # uuid names, vectors reference files by name)
+            # uuid names, vectors reference files by name). Stats and
+            # blooms stay sound after deletes: bounds only get looser
+            # and a deleted key degrades to a false positive.
             carried_dv = prev.get("delete_files") or []
             stats = {**(prev.get("stats") or {}), **new_stats}
             bloom = {**(prev.get("bloom") or {}), **new_bloom}
@@ -439,8 +484,8 @@ def commit_staged(
             "files": files,
             "n_new_files": len(new_files),
         }
-        if carried_dv:
-            manifest["delete_files"] = carried_dv
+        if carried_dv or new_delete_files:
+            manifest["delete_files"] = carried_dv + new_delete_files
         if stats:
             manifest["stats"] = stats
         if bloom:
@@ -543,22 +588,8 @@ def read_table(
     df = reader.parquet(*[str(Path(table_path) / f) for f in files])
     delete_files = manifest.get("delete_files") or []
     if delete_files:
-        from pyspark.sql import functions as F
-
-        dv = spark.read.parquet(
-            *[str(Path(table_path) / f) for f in delete_files]
-        )
-        cols = df.columns
-        df = (
-            df.withColumn(
-                "__file",
-                F.element_at(
-                    F.split(F.col("_metadata.file_path"), "/"), -1
-                ),
-            )
-            .withColumn("__pos", F.col("_metadata.row_index"))
-            .join(F.broadcast(dv), ["__file", "__pos"], "left_anti")
-            .select(*cols)
+        df = _live_positions(spark, table_path, df, delete_files).select(
+            *df.columns
         )
     return df
 
@@ -644,17 +675,11 @@ def delete_where(
         # positions of surviving-then-matching rows, against this
         # exact snapshot (existing vectors applied first — a row
         # already deleted must not be re-recorded)
-        df = spark.read.parquet(*[str(table / f) for f in files])
-        df = df.withColumn(
-            "__file",
-            F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
-        ).withColumn("__pos", F.col("_metadata.row_index"))
-        old_dv_files = manifest.get("delete_files") or []
-        if old_dv_files:
-            old_dv = spark.read.parquet(
-                *[str(table / f) for f in old_dv_files]
-            )
-            df = df.join(F.broadcast(old_dv), ["__file", "__pos"], "left_anti")
+        df = _live_positions(
+            spark, table_path,
+            spark.read.parquet(*[str(table / f) for f in files]),
+            manifest.get("delete_files") or [],
+        )
         matches = df.filter(F.expr(predicate)).select("__file", "__pos")
         # one count serves both the no-op check and the staging-size
         # decision (an isEmpty here plus a count inside the stager
@@ -662,43 +687,14 @@ def delete_where(
         n_matches = matches.count()
         if n_matches == 0:
             return None
-        # stage the new delete files, then CAS-publish the manifest
-        token = uuid.uuid4().hex[:12]
-        staging = table / f"_staging-dv-{token}"
-        _stage_delete_vectors(matches, staging, n_matches)
-        dv_dir = table / "deletes"
-        dv_dir.mkdir(parents=True, exist_ok=True)
-        new_dv = []
-        for i, part in enumerate(sorted(staging.glob("*.parquet"))):
-            name = f"{token}-dv{i:05d}.parquet"
-            os.rename(part, dv_dir / name)
-            new_dv.append(f"deletes/{name}")
-        shutil.rmtree(staging, ignore_errors=True)
-
-        next_manifest = {
-            "version": base + 1,
-            "mode": "delete",
-            "files": list(files),
-            "n_new_files": 0,
-            "delete_files": old_dv_files + new_dv,
-        }
-        if manifest.get("stats"):
-            # still sound after deletes: bounds only get looser, and
-            # skipping needs containment, not tightness
-            next_manifest["stats"] = manifest["stats"]
-        if manifest.get("bloom"):
-            # same: a deleted key degrades to a false positive
-            next_manifest["bloom"] = manifest["bloom"]
-        target = _manifest_path(table_path, base + 1)
-        tmp = _log_dir(table_path) / f".tmp-{token}-{base + 1}.json"
-        tmp.write_text(json.dumps(next_manifest))
+        new_dv = _stage(matches, table_path, "deletes", n_matches)
         try:
-            os.link(tmp, target)
-        except FileExistsError:
-            tmp.unlink()
+            return commit_staged(
+                table_path, [], "delete", expected_base=base,
+                new_delete_files=new_dv,
+            )
+        except CommitConflict:
             continue  # foreign commit mid-delete: recompute positions
-        tmp.unlink()
-        return base + 1
     raise RuntimeError(
         f"delete contention: {max_retries} conflicts at {table_path}"
     )
@@ -726,85 +722,44 @@ def merge_into(
     ``source`` must be key-unique (pre-dedup with upsert_last_wins
     for versioned streams). Read-modify-write: CAS against the
     snapshot the positions were computed on, retried on conflict."""
-    from pyspark.sql import functions as F
-
     table = Path(table_path)
     for _ in range(max_retries):
         vs = versions(table_path)
         base = vs[-1] if vs else None
         if base is None:
-            return commit_write(source, table_path, expected_base=-1)
+            try:
+                return commit_write(source, table_path, expected_base=-1)
+            except CommitConflict:
+                continue  # another writer created the table: merge into it
         manifest = _read_manifest(table_path, base)
-        files = manifest["files"]
-        old_dv_files = manifest.get("delete_files") or []
         # positions of live rows whose key appears in the source
-        snap = spark.read.parquet(*[str(table / f) for f in files])
-        snap = snap.withColumn(
-            "__file",
-            F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
-        ).withColumn("__pos", F.col("_metadata.row_index"))
-        if old_dv_files:
-            old_dv = spark.read.parquet(
-                *[str(table / f) for f in old_dv_files]
-            )
-            snap = snap.join(
-                F.broadcast(old_dv), ["__file", "__pos"], "left_anti"
-            )
+        snap = _live_positions(
+            spark, table_path,
+            spark.read.parquet(*[str(table / f) for f in manifest["files"]]),
+            manifest.get("delete_files") or [],
+        )
         replaced = snap.join(
             source.select(*keys).dropDuplicates(keys), keys, "left_semi"
         ).select("__file", "__pos")
 
-        token = uuid.uuid4().hex[:12]
-        # stage new data files (the whole source: updates + inserts)
-        staging = table / f"_staging-{token}"
-        source.write.mode("overwrite").parquet(str(staging))
-        data_dir = table / "data"
-        data_dir.mkdir(parents=True, exist_ok=True)
-        new_files = []
-        for i, part in enumerate(sorted(staging.glob("*.parquet"))):
-            name = f"{token}-part{i:05d}.parquet"
-            os.rename(part, data_dir / name)
-            new_files.append(f"data/{name}")
-        shutil.rmtree(staging, ignore_errors=True)
-        # stage deletion vectors for the replaced positions (if any);
-        # count once — it decides both the skip and the staging size
-        new_dv: list[str] = []
+        # stage the new data files (the whole source: updates +
+        # inserts), then deletion vectors for the replaced positions
+        # (if any); count once — it decides both the skip and the
+        # staging size. The merge's new files carry no stats
+        # (unknown => always read — sound, never wrong).
+        new_files = _stage(source, table_path)
         n_replaced = replaced.count()
-        if n_replaced:
-            dv_staging = table / f"_staging-dv-{token}"
-            _stage_delete_vectors(replaced, dv_staging, n_replaced)
-            dv_dir = table / "deletes"
-            dv_dir.mkdir(parents=True, exist_ok=True)
-            for i, part in enumerate(sorted(dv_staging.glob("*.parquet"))):
-                name = f"{token}-dv{i:05d}.parquet"
-                os.rename(part, dv_dir / name)
-                new_dv.append(f"deletes/{name}")
-            shutil.rmtree(dv_staging, ignore_errors=True)
-
-        next_manifest = {
-            "version": base + 1,
-            "mode": "merge",
-            "files": files + new_files,
-            "n_new_files": len(new_files),
-        }
-        if old_dv_files or new_dv:
-            next_manifest["delete_files"] = old_dv_files + new_dv
-        if manifest.get("stats"):
-            # carried for old files; the merge's new files have no
-            # stats (unknown => always read — sound, never wrong)
-            next_manifest["stats"] = manifest["stats"]
-        if manifest.get("bloom"):
-            next_manifest["bloom"] = manifest["bloom"]
-        target = _manifest_path(table_path, base + 1)
-        tmp = _log_dir(table_path) / f".tmp-{token}-{base + 1}.json"
-        tmp.write_text(json.dumps(next_manifest))
+        new_dv = (
+            _stage(replaced, table_path, "deletes", n_replaced)
+            if n_replaced else []
+        )
         try:
-            os.link(tmp, target)
-        except FileExistsError:
-            tmp.unlink()
+            return commit_staged(
+                table_path, new_files, "merge", expected_base=base,
+                new_delete_files=new_dv,
+            )
+        except CommitConflict:
             continue  # foreign commit mid-merge: recompute everything
-        tmp.unlink()
-        return base + 1
     raise RuntimeError(
         f"merge contention: {max_retries} conflicts at {table_path}"
     )

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import threading
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -803,7 +804,7 @@ def _rearm_slot_caches(spark) -> None:
     the frame, and the plan silently executes its raw lineage —
     measured ~50x slower for the perceptual pair queries because the
     interpreted higher-order-function hash projection is inlined by
-    filter pushdown into per-row join predicates (BENCH_r11 attempt-2:
+    filter pushdown into per-row join predicates (an r11 driver run:
     dedup_video_pairs 179 s uncached vs 2.4 s cached). Re-registration
     is lazy (no job runs until the plan executes) and bounded by the
     slot registry's one-frame-per-operator contract."""
@@ -814,15 +815,23 @@ def _rearm_slot_caches(spark) -> None:
         try:
             if not df.storageLevel.useMemory and not df.storageLevel.useDisk:
                 df.cache()
-        except Exception:
-            pass  # session already stopped
+        except Py4JError:
+            if not _session_stopped(df):
+                raise
+
+
+def _session_stopped(df: DataFrame) -> bool:
+    """True once ``df``'s SparkContext has been stopped (PySpark drops
+    the context's JVM handle on stop) — the one state in which a slot
+    frame's JVM calls may fail and the failure is safe to ignore."""
+    return df.sparkSession.sparkContext._jsc is None
 
 
 try:  # registry import is cycle-safe: plans.registry imports nothing from operators
     from sales_etl_spark.plans.registry import register_plan_cache_rearm
 
     register_plan_cache_rearm(_rearm_slot_caches)
-except Exception:  # pragma: no cover — standalone operator use
+except ImportError:  # pragma: no cover — standalone operator use
     pass
 
 
@@ -853,8 +862,9 @@ def _slot_cache(df: DataFrame, slot: str) -> DataFrame:
         try:
             if not prev.sameSemantics(cached):
                 prev.unpersist(blocking=False)
-        except Exception:
-            pass  # previous occupant's session already stopped
+        except Py4JError:
+            if not _session_stopped(prev):
+                raise
     return cached
 
 

@@ -129,7 +129,7 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     — one local row group serialized 6 regex passes onto one core;
     no-op at scale)."""
     st = _star(spark, sf_dir)
-    return spread_narrow_input(st.documents).select(
+    return spread_narrow_input(st.documents.select("doc_id", "text")).select(
         "doc_id",
         TX.char_count("text").alias("n_chars_calc"),
         TX.word_count("text").alias("n_words"),
@@ -605,13 +605,8 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     (A production model broadcasts learned bucket weights; the
     plumbing — hash, lookup, mean, threshold — is identical.) Pure
     map-side codegen fold over the token array: no shuffle, no UDF,
-    no explode — the classifier costs one projection at 100 TB.
-
-    r12 (guide §2.5 input skew): the local documents table is ONE
-    parquet row group, so the per-token md5 fold — the whole cost of
-    the query — ran on one core of 32; spread_narrow_input
-    repartitions the narrow (doc_id, text) frame before the fold
-    (conditional: a no-op at 100 TB where storage provides splits)."""
+    no explode — the classifier costs one projection at 100 TB, and
+    its plan has no Exchange (tests/test_plans.py)."""
     st = _star(spark, sf_dir)
     toks = TX.tokens(F.lower(F.col("text")))
     w_int = lambda t: (  # noqa: E731
@@ -622,9 +617,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long")
         - F.lit(4294967296)
     )
-    base = spread_narrow_input(
-        st.documents.select("doc_id", "text")
-    ).select("doc_id", toks.alias("__toks"))
+    base = st.documents.select("doc_id", toks.alias("__toks"))
     k = F.size("__toks")
     sum_int = F.aggregate(
         F.transform(F.col("__toks"), w_int),

@@ -48,10 +48,10 @@ QUERY_REGISTRY: dict[str, QueryDef] = {}
 #: Built-plan memo: (applicationId, query name, abspath(sf_dir)) →
 #: DataFrame. DataFrames are immutable lazy plans, so handing the same
 #: plan object back is semantics-free — but it removes the per-call
-#: Python/Py4J plan-construction latency (measured 0.13-0.5 s per mart
-#: under load, a third of sub-second query wall time). Real
-#: deployments build a query once and execute it many times; the memo
-#: gives the bench/driver loop the same cost profile. Keyed on
+#: Python/Py4J plan-construction latency. The four registry builders
+#: the benchmark's etl_registry workload runs (perfbench/) take
+#: 0.4-1.0 s per set to build without the memo and under 0.005 s with
+#: it (5 repetitions, 4 cores, sf0.01-sf0.02 stars). Keyed on
 #: applicationId so a new session (new JVM state, new conf) never
 #: reuses a stale plan.
 _PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
@@ -64,9 +64,9 @@ _PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 #: skips the builder body, nothing ever re-registers it. The plan
 #: then silently executes its raw lineage, which for the perceptual
 #: pair queries is ~50x slower (the interpreted higher-order-function
-#: hash projection gets inlined into per-row join predicates; the
-#: BENCH_r11 attempt-2 driver record measured dedup_video_pairs at
-#: 179 s vs 2.4 s cached, r12 root-cause). Operators that own an
+#: hash projection gets inlined into per-row join predicates; an r11
+#: driver run measured dedup_video_pairs at 179 s vs 2.4 s cached,
+#: r12 root-cause). Operators that own an
 #: internal cache register a hook here; every memo HIT replays the
 #: hooks so a dropped cache entry is re-registered (registration is
 #: lazy and idempotent — no job runs unless the plan executes).
@@ -77,16 +77,6 @@ def register_plan_cache_rearm(hook: Callable[[SparkSession], None]) -> None:
     """Register a hook that re-arms an operator's internal cache
     registrations for the given session (see _PLAN_CACHE_REARM_HOOKS)."""
     _PLAN_CACHE_REARM_HOOKS.append(hook)
-
-
-def clear_plan_cache() -> None:
-    """Drop every memoized plan so the next builder call re-runs the
-    builder body. Harnesses that interleave ``clearCache()`` with
-    repeated measurement passes call this at the top of each pass:
-    builders re-register their operator-internal ``cache()`` frames
-    (the ~35 inline two-consumer caches the re-arm hooks don't cover),
-    so a retried pass measures the same plan shape as the first."""
-    _PLAN_CACHE.clear()
 
 
 def query(name: str, oracle: str | None = None) -> Callable:

@@ -36,6 +36,13 @@ _RUNTIME_CONFS = {
     # Generate would skip anyway — dropping it is free.
     "spark.sql.optimizer.excludedRules":
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
+    # orderBy().limit(k) plans TakeOrderedAndProject, whose per-task
+    # top-k buffer is allocated at 2k slots up front: a caller's
+    # "everything" k (10**9) asked for an 8 GB array per task, and the
+    # OutOfMemoryError killed the local-mode JVM with it. Past 1M rows
+    # Spark plans a sort + limit instead (same rows, memory bounded by
+    # the data, not by k).
+    "spark.sql.execution.topKSortFallbackThreshold": "1000000",
 }
 
 #: Confs that must be set at session build time.
@@ -136,6 +143,27 @@ def ensure_protobuf() -> bool:
     return False
 
 
+def _physical_memory_bytes() -> int | None:
+    """Physical memory of this machine, or None where the platform
+    does not report it."""
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return None
+
+
+def _driver_mem(phys_bytes: int | None) -> str:
+    """Default local-mode driver heap: half of physical memory in whole
+    GiB, between 1g and 24g. Half leaves room for the JVM's off-heap
+    use, the Python workers and the OS page cache that parquet scans
+    lean on; 24g is the size measured sufficient for full-registry
+    sweeps on a 128 GiB box. Unknown memory falls back to Spark's own
+    1g default."""
+    if not phys_bytes:
+        return "1g"
+    return f"{min(24, max(1, phys_bytes // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "sales-etl-spark",
     master: str | None = None,
@@ -172,15 +200,18 @@ def get_spark(
         # over-splitting there is the opposite failure mode.
         builder = builder.config("spark.sql.files.maxPartitionBytes", "1m")
         # In local mode the driver JVM IS every executor, yet Spark's
-        # default driver heap is 1g — on this 128 GiB / 32-thread box
-        # that manifested as GC-locker stalls under bench load and, in
+        # default driver heap is 1g — on a 128 GiB / 32-thread box
+        # that manifested as GC-locker stalls under load and, in
         # full-registry sweeps (190+ queries, one session), spurious
         # "Not enough memory to build and broadcast" failures on late
-        # queries that pass in a fresh session. Only effective at JVM
-        # launch; a real cluster sets executor/driver memory itself.
+        # queries that pass in a fresh session. The default is sized
+        # from the machine (:func:`_driver_mem`) so it never exceeds
+        # physical memory. Only effective at JVM launch; a real
+        # cluster sets executor/driver memory itself.
         builder = builder.config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or _driver_mem(_physical_memory_bytes()),
         )
     if shuffle_partitions is not None:
         builder = builder.config(

@@ -285,7 +285,7 @@ def test_banded_cache_rearms_after_clearcache_on_memo_hit(spark):
     nothing re-registered the banded frame's internal cache and the
     memoized plan silently executed its raw lineage — the interpreted
     HOF hash projection then re-evaluates inside pushed join
-    predicates per row (BENCH_r11 attempt-2: dedup_video_pairs 179 s
+    predicates per row (an r11 driver run: dedup_video_pairs 179 s
     uncached vs 2.4 s cached). The memo-hit re-arm hook must restore
     the registration: after build -> clearCache -> memo hit, the slot
     frame must be cache-REGISTERED again (lazy — no job runs here)."""
@@ -325,6 +325,43 @@ def test_slot_cache_same_plan_repeat_keeps_registration(spark):
     assert lvl.useMemory or lvl.useDisk
     b.unpersist(blocking=False)
     spark.catalog.clearCache()
+
+
+def test_rearm_hook_ignores_only_stopped_session_errors():
+    """The memo-hit re-arm hook may ignore a JVM error only when the
+    slot frame's session is stopped; a live session's failure, or any
+    non-JVM error, must surface instead of leaving a memoized plan
+    silently uncached."""
+    from types import SimpleNamespace
+
+    from py4j.protocol import Py4JError
+
+    from sales_etl_spark.operators import dedup
+
+    class Frame:
+        def __init__(self, jsc, exc):
+            self.sparkSession = SimpleNamespace(
+                sparkContext=SimpleNamespace(_jsc=jsc)
+            )
+            self._exc = exc
+
+        @property
+        def storageLevel(self):
+            raise self._exc
+
+    session = object()
+    key = (id(session), "test_rearm_slot")
+    try:
+        dedup._CACHE_SLOTS[key] = Frame(None, Py4JError("gateway gone"))
+        dedup._rearm_slot_caches(session)  # stopped session: ignored
+        dedup._CACHE_SLOTS[key] = Frame(object(), Py4JError("live"))
+        with pytest.raises(Py4JError):
+            dedup._rearm_slot_caches(session)
+        dedup._CACHE_SLOTS[key] = Frame(None, AttributeError("bug"))
+        with pytest.raises(AttributeError):
+            dedup._rearm_slot_caches(session)
+    finally:
+        dedup._CACHE_SLOTS.pop(key, None)
 
 
 def test_incremental_exact_dedup_planted(spark):

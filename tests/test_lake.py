@@ -510,6 +510,152 @@ def test_upsert_remerges_when_compaction_lands_mid_merge(spark, tmp_path, monkey
     assert got == [(1, 2, "a2"), (2, 1, "b")]
 
 
+@pytest.mark.parametrize("op", ["merge_into", "delete_where"])
+def test_dml_redoes_work_when_compaction_lands_mid_call(
+    spark, tmp_path, monkeypatch, op
+):
+    """A compaction landing between a merge's or a delete's snapshot
+    read and its publish must make the call recompute its deletion
+    vectors against the compacted snapshot (CommitConflict, re-read)
+    — never publish vectors that point at the files it replaced."""
+    t = str(tmp_path / "tbl")
+    lake.commit_write(
+        spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), t
+    )
+    lake.commit_write(
+        spark.createDataFrame([(3, "c")], "k long, v string"), t, "append"
+    )
+
+    real_commit = lake.commit_staged
+    raced = {"done": False}
+
+    def racing_commit(table_path, new_files, mode="append", **kwargs):
+        if mode in ("merge", "delete") and not raced["done"]:
+            raced["done"] = True
+            # compaction completes first: rewrites the 3-row snapshot
+            lake.compact(spark, t, target_files=1)
+        return real_commit(table_path, new_files, mode, **kwargs)
+
+    monkeypatch.setattr(lake, "commit_staged", racing_commit)
+    if op == "merge_into":
+        v = lake.merge_into(
+            spark, t,
+            spark.createDataFrame([(2, "b2"), (4, "d")], "k long, v string"),
+            keys=["k"],
+        )
+        want = [(1, "a"), (2, "b2"), (3, "c"), (4, "d")]
+    else:
+        v = lake.delete_where(spark, t, "k = 2")
+        want = [(1, "a"), (3, "c")]
+    assert raced["done"]
+    # v0, v1, the compaction's v2, then the redone call
+    assert v == lake.versions(t)[-1] == 3
+    compacted = lake._read_manifest(t, 2)["files"]
+    m = lake._read_manifest(t, v)
+    assert m["files"][: len(compacted)] == compacted
+    dv = spark.read.parquet(*[str(Path(t) / f) for f in m["delete_files"]])
+    assert {r["__file"] for r in dv.collect()} == {
+        Path(f).name for f in compacted
+    }
+    assert _rows(lake.read_table(spark, t)) == want
+    report = lake.fsck(t)
+    assert report["ok"] and not report["missing_files"]
+
+
+def test_merge_into_empty_table_merges_when_a_writer_creates_it_first(
+    spark, tmp_path, monkeypatch
+):
+    """A merge into an empty table commits as the table's first version
+    (expected_base=-1); when another writer creates the table first,
+    the merge must re-read and merge into it, not raise."""
+    t = str(tmp_path / "tbl")
+    real_commit = lake.commit_staged
+    raced = {"done": False}
+
+    def racing_commit(table_path, new_files, mode="append", **kwargs):
+        if kwargs.get("expected_base") == -1 and not raced["done"]:
+            raced["done"] = True
+            lake.commit_write(
+                spark.createDataFrame(
+                    [(1, "a"), (2, "b")], "k long, v string"
+                ),
+                t,
+            )
+        return real_commit(table_path, new_files, mode, **kwargs)
+
+    monkeypatch.setattr(lake, "commit_staged", racing_commit)
+    v = lake.merge_into(
+        spark, t,
+        spark.createDataFrame([(2, "b2"), (3, "c")], "k long, v string"),
+        keys=["k"],
+    )
+    assert raced["done"]
+    assert v == 1 and lake._read_manifest(t, v)["mode"] == "merge"
+    assert _rows(lake.read_table(spark, t)) == [(1, "a"), (2, "b2"), (3, "c")]
+
+
+def test_merge_and_delete_manifests_keep_their_keys_and_modes(
+    spark, tmp_path
+):
+    """Merge and delete publish through the same commit as appends,
+    yet their manifests keep the layout readers and existing tables
+    rely on: the same keys in the same order, the ``delete``/``merge``
+    labels, and deletion vectors, stats and blooms carried forward."""
+    t = str(tmp_path / "tbl")
+    v0 = lake.commit_write(
+        spark.createDataFrame(
+            [(i, f"v{i}") for i in range(10)], "k long, v string"
+        ),
+        t, stats_cols=["k"], bloom_cols=["k"],
+    )
+    m0 = lake._read_manifest(t, v0)
+    full = ["version", "mode", "files", "n_new_files", "delete_files",
+            "stats", "bloom"]
+
+    vd = lake.delete_where(spark, t, "k = 1")
+    md = lake._read_manifest(t, vd)
+    assert list(md) == full
+    assert (md["version"], md["mode"], md["n_new_files"]) == (1, "delete", 0)
+    assert md["files"] == m0["files"]
+    assert len(md["delete_files"]) == 1
+    assert (md["stats"], md["bloom"]) == (m0["stats"], m0["bloom"])
+
+    vm = lake.merge_into(
+        spark, t,
+        spark.createDataFrame([(2, "x"), (20, "y")], "k long, v string"),
+        keys=["k"],
+    )
+    mm = lake._read_manifest(t, vm)
+    assert list(mm) == full
+    assert (mm["version"], mm["mode"]) == (2, "merge")
+    new = mm["files"][len(md["files"]):]
+    assert mm["files"][: len(md["files"])] == md["files"]
+    assert mm["n_new_files"] == len(new) >= 1
+    assert mm["delete_files"][: len(md["delete_files"])] == md["delete_files"]
+    assert len(mm["delete_files"]) == len(md["delete_files"]) + 1
+    # the merge's new files carry no skip index (unknown => read)
+    assert (mm["stats"], mm["bloom"]) == (m0["stats"], m0["bloom"])
+
+    # a pure-insert merge into a table with no vectors or skip index
+    # writes only the four core keys
+    t2 = str(tmp_path / "plain")
+    lake.commit_write(
+        spark.createDataFrame([(1, "a")], "k long, v string"), t2
+    )
+    v = lake.merge_into(
+        spark, t2, spark.createDataFrame([(5, "e")], "k long, v string"),
+        keys=["k"],
+    )
+    m = lake._read_manifest(t2, v)
+    assert list(m) == ["version", "mode", "files", "n_new_files"]
+    assert m["mode"] == "merge"
+
+    # both labels are read-modify-write: positions need a pinned base
+    for mode in ("merge", "delete"):
+        with pytest.raises(ValueError, match="expected_base"):
+            lake.commit_staged(t2, [], mode)
+
+
 def test_delete_where_removes_rows_without_rewriting_files(spark, tmp_path):
     """Deletion vectors: DELETE drops rows at read time, data files
     stay byte-identical, time travel shows pre-delete state, and a

@@ -1,6 +1,7 @@
-"""ensure_protobuf: the vendored-copy fallback that unblocks
-transformWithStateInPandas in trimmed environments (no Spark needed —
-pure sys.path / environ behavior)."""
+"""Session helpers that need no Spark: ensure_protobuf, the
+vendored-copy fallback that unblocks transformWithStateInPandas in
+trimmed environments (pure sys.path / environ behavior), and the
+machine-sized driver-heap default."""
 
 from __future__ import annotations
 
@@ -50,3 +51,19 @@ def test_ensure_protobuf_fallback_exports_worker_pythonpath(monkeypatch):
         os.environ.get("TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK")
         == "true"
     )
+
+
+def test_driver_heap_default_is_sized_from_physical_memory():
+    gib = 2**30
+    # half of physical memory, whole GiB
+    assert S._driver_mem(15 * gib) == "7g"
+    assert S._driver_mem(32 * gib) == "16g"
+    # bounded: never below 1g, never above the 24g sweep size
+    assert S._driver_mem(1 * gib) == "1g"
+    assert S._driver_mem(128 * gib) == "24g"
+    # unknown memory: Spark's own default
+    assert S._driver_mem(None) == "1g"
+    # this machine's default fits in its memory
+    phys = S._physical_memory_bytes()
+    if phys:
+        assert int(S._driver_mem(phys)[:-1]) * gib <= phys

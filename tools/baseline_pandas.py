@@ -9,7 +9,7 @@ computed the way the reference computes them — pandas merge/groupby,
 single-threaded. Semantics re-derived from SURVEY.md §2, not copied.
 
 Usage: python tools/baseline_pandas.py [sf_dir] [runs]
-Prints one JSON line mirroring bench.py's shape.
+Prints one JSON line of per-mart seconds (best of ``runs``).
 """
 
 from __future__ import annotations
@@ -131,7 +131,7 @@ def q_product_ranking(s: pd.DataFrame, t: dict[str, pd.DataFrame]) -> pd.DataFra
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     runs = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-    t = load(sf_dir)  # I/O outside the timed region, like bench.py's warm-up
+    t = load(sf_dir)  # I/O outside the timed region
 
     timings: dict[str, float] = {}
 

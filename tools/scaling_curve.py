@@ -1,9 +1,8 @@
 """Cross-SF scaling curves for the bench-dominant queries.
 
 Times each target query at sf0.01, sf0.1 and a synthesized sf0.2
-(sf0.1 doubled with shifted keys — see ``build_sf02``) in ONE process
-with bench.py's calibration guard, then prints per-query seconds and
-the step ratios. What the ratios prove:
+(sf0.1 doubled with shifted keys — see ``build_sf02``) in ONE process,
+then prints per-query seconds and the step ratios. What the ratios prove:
 
 - a ratio near the DATA ratio (10x for 0.01→0.1, 2x for 0.1→0.2)
   means the query is data-bound — the plan scales linearly;
@@ -272,19 +271,13 @@ def build_sf02(spark) -> None:
 
 
 def main() -> None:
-    from bench import calibrate
-
     from sales_etl_spark.plans import QUERY_REGISTRY
     from sales_etl_spark.session import get_spark
 
     # CURVE=sf1: the round-9 checkpoint — sf0.1 -> synthetic sf1.0
-    # (10x) over the full bench headline set, one step, min-of-RUNS.
+    # (10x), one step, min-of-RUNS.
     sf1_mode = os.environ.get("CURVE") == "sf1"
-    if sf1_mode:
-        import bench as _bench
-        queries = sys.argv[1:] or list(_bench.HEADLINE)
-    else:
-        queries = sys.argv[1:] or DEFAULT_QUERIES
+    queries = sys.argv[1:] or DEFAULT_QUERIES
     spark = get_spark(
         "sales-etl-spark-scaling", master="local[32]",
         shuffle_partitions=8,
@@ -296,7 +289,6 @@ def main() -> None:
         build_sf02(spark)
 
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    calibration = calibrate(spark)
 
     steps = [(SF01, SF10, 10.0)] if sf1_mode else STEPS
     sf_dirs = (SF01, SF10) if sf1_mode else (SF001, SF01, SF02)
@@ -332,7 +324,7 @@ def main() -> None:
         }
         for key, r in ratios.items():
             report[name][f"time_ratio_at_{key}"] = r
-    print(json.dumps({"calibration": calibration, "curve": report}))
+    print(json.dumps({"curve": report}))
     spark.stop()
 
 
